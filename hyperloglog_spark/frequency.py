@@ -105,7 +105,7 @@ class CmsAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         prepared = [_hash_expr(cols, self.hashing)]
         if self.weight_col is not None:
-            prepared.append(F.col(self.weight_col).cast("long"))
+            prepared.append(_int_weight_expr(self.weight_col))
         return prepared
 
     def build_grouped(self, codes, values, n_groups) -> list[bytes]:
@@ -117,11 +117,6 @@ class CmsAggregator(SketchAggregator):
             arr, warr = values.values()
             hashes = _to_numpy_u64(arr)
             weights = np.asarray(warr, dtype=np.int64)
-            if len(weights) and int(weights.min()) < 0:
-                raise ValueError(
-                    "cms weights must be non-negative (counters are "
-                    "unsigned; for signed updates use the count sketch)"
-                )
         if n_groups == 1:
             return [cms.from_hashes(hashes, counts=weights, d=self.d,
                                     log2_w=self.log2_w)]
@@ -402,7 +397,7 @@ def cms_topk_shards(
     src = _drop_null_rows(df, [col])
     col_field = next(f for f in src.schema.fields if f.name == col)
     weighted = weight_col is not None
-    wcol = (F.col(weight_col).cast("long") if weighted
+    wcol = (_int_weight_expr(weight_col) if weighted
             else F.lit(1).cast("long"))
     proj = src.select(
         *[F.col(c) for c in shard_by],
@@ -425,9 +420,6 @@ def cms_topk_shards(
         h = pdf["__h"].to_numpy(dtype=np.int64).view(np.uint64)
         if weighted:
             w = pdf["__w"].to_numpy(dtype=np.int64)
-            if len(w) and int(w.min()) < 0:
-                raise ValueError("cms_topk_shards weights must be "
-                                 "non-negative")
             sk = cms.from_hashes(h, counts=w, d=d, log2_w=log2_w)
         else:
             sk = cms.from_hashes(h, d=d, log2_w=log2_w)

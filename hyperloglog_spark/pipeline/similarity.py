@@ -109,7 +109,7 @@ def brute_force_topk(
     The query set is materialized once into the UDF closure — the
     broadcast-join contract (small side must fit an executor). That
     contract is ENFORCED, not assumed (VERDICT r2 #3, the
-    ``_resolve_jvm_grouped`` guard pattern): a declared
+    ``_resolve_engine`` guard pattern): a declared
     ``expected_queries`` above ``max_broadcast_queries`` auto-routes to
     ``blocked_topk`` (the shuffled exact path, identical output) before
     any driver collect. With no declaration, the materializing collect is

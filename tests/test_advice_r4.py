@@ -5,9 +5,10 @@
 2. ``kll.update_weighted`` must reject non-finite weights: floor(inf)==inf
    slipped through the integrality check and the int64 cast then produced
    INT64_MIN, silently corrupting level placement.
-3. ``cms_topk_verified`` (and ``cms_topk``) promised exact total mass but
-   silently floor-truncated fractional double weights via cast("long");
-   fractional weights now raise, integral-valued doubles still work.
+3. ``cms_topk_verified`` (and ``cms_topk``, ``cms_agg``,
+   ``cms_topk_shards``) promised exact total mass but silently
+   floor-truncated fractional double weights via cast("long"); fractional
+   weights now raise, integral-valued doubles still work.
 """
 
 from __future__ import annotations
@@ -66,6 +67,7 @@ def test_kll_weighted_still_matches_unweighted_on_ones():
 
 def test_cms_topk_verified_rejects_fractional_weights(spark):
     from hyperloglog_spark import cms_topk, cms_topk_verified
+    from hyperloglog_spark.frequency import cms_agg, cms_topk_shards
 
     df = spark.createDataFrame(
         [("a", 1.5), ("b", 2.0), ("a", 3.0)], ["k", "w"]
@@ -74,6 +76,11 @@ def test_cms_topk_verified_rejects_fractional_weights(spark):
         cms_topk_verified(df, "k", k=2, weight_col="w").collect()
     with pytest.raises(Exception, match="non-negative integers"):
         cms_topk(df, "k", k=2, weight_col="w").collect()
+    # the CmsAggregator path and the shard builder share the checked cast
+    with pytest.raises(Exception, match="non-negative integers"):
+        cms_agg(df, "k", weight_col="w").collect()
+    with pytest.raises(Exception, match="non-negative integers"):
+        cms_topk_shards(df, "k", shard_by="k", weight_col="w").collect()
 
 
 def test_cms_topk_verified_integral_double_weights_exact(spark):

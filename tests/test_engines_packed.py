@@ -39,13 +39,43 @@ def test_jvm_engine_composite_key_and_p(spark, sf01_dir):
 
 
 def test_jvm_engine_shuffle_budget(spark, sf01_dir):
+    """Every jvm entry point: one scan, no per-row Arrow hop, and at most
+    the 2 Exchanges each of these inputs planned before the register-row
+    helpers were merged: register agg (1, with map-side partial) + group
+    finalize (1)."""
+    from hyperloglog_spark import approx_distinct_multi, hll_sketch_agg
     from hyperloglog_spark.engine.plans import assert_max_exchanges
 
+    spark.catalog.clearCache()     # a cached scan would hide the FileScan
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    q = approx_distinct(ev, "user_id", group_by="event_type", engine="jvm",
-                        expected_groups=8)
-    # register agg (1, with map-side partial) + group finalize (1)
-    assert_max_exchanges(q, 2)
+    grouped = dict(group_by="event_type", engine="jvm", expected_groups=8)
+    queries = {
+        "global": approx_distinct(ev, "user_id", engine="jvm"),
+        "grouped": approx_distinct(ev, "user_id", **grouped),
+        "multi global": approx_distinct_multi(
+            ev, ["user_id", "value"], engine="jvm"),
+        "multi grouped": approx_distinct_multi(
+            ev, ["user_id", "value"], **grouped),
+        "hll_sketch_agg": hll_sketch_agg(ev, "user_id", **grouped),
+    }
+    for name, q in queries.items():
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1, name
+        assert "MapInArrow" not in plan, name
+        assert_max_exchanges(q, 2)
+
+
+@pytest.mark.parametrize("p", [3, 17])
+@pytest.mark.parametrize("engine", ["arrow", "jvm"])
+@pytest.mark.parametrize("entry", [
+    "approx_distinct", "hll_sketch_agg", "approx_distinct_multi"])
+def test_out_of_range_p_raises_on_driver(spark, entry, engine, p):
+    import hyperloglog_spark as hs
+
+    df = spark.createDataFrame([(1, 2)], "a long, b long")
+    cols = ["a", "b"] if entry == "approx_distinct_multi" else "a"
+    with pytest.raises(ValueError, match="precision p"):
+        getattr(hs, entry)(df, cols, p=p, engine=engine)
 
 
 # ------------------------------------------------------------ packed binary

@@ -99,6 +99,36 @@ class TestMultiDistinctJvmEngine:
         assert row["n_s"] == 2
         assert row["n_i"] == 0
 
+    def test_all_null_group_kept_like_arrow(self, spark):
+        # group "z" has only NULLs in the measured columns: the arrow path
+        # emits it with zeros, so the jvm path must not drop it
+        df = spark.createDataFrame(
+            [("y", "a", 1), ("y", None, 2), ("z", None, None),
+             ("z", None, None)],
+            "g string, s string, i int",
+        )
+        kw = dict(group_by="g")
+        a = approx_distinct_multi(df, ["s", "i"], **kw).orderBy("g").collect()
+        j = (approx_distinct_multi(df, ["s", "i"], engine="jvm",
+                                   expected_groups=2, **kw)
+             .orderBy("g").collect())
+        assert a == j
+        assert [tuple(r) for r in j] == [("y", 1, 2), ("z", 0, 0)]
+
+    def test_all_null_global_and_empty_input(self, spark):
+        df = spark.createDataFrame(
+            [(None, None), (None, None)], "s string, i int"
+        )
+        for engine in ("arrow", "jvm"):
+            got = approx_distinct_multi(df, ["s", "i"], engine=engine)
+            assert [tuple(r) for r in got.collect()] == [(0, 0)], engine
+            # one column is the plain (untagged) builder: same rule
+            got = approx_distinct_multi(df, ["s"], engine=engine)
+            assert [tuple(r) for r in got.collect()] == [(0,)], engine
+            empty = approx_distinct_multi(
+                df.limit(0), ["s", "i"], engine=engine)
+            assert empty.collect() == [], engine
+
     def test_single_scan_no_arrow_udf_in_reduction(self, spark, sf01_dir):
         spark.catalog.clearCache()
         fresh = spark.read.parquet(f"{sf01_dir}/events.parquet")
