@@ -6,14 +6,16 @@ map-side combine is built explicitly (SURVEY.md §3.4):
     phase 1 (mapInArrow):  per-partition, per-group vectorized sketch build —
                            one output row per (partition, group), each a
                            BinaryType sketch (16 KB dense / smaller sparse)
-    phase 2 (shuffle):     groupBy(group_cols).applyInPandas — associative
-                           merge of the tiny partials, then finalize
+    phase 2 (mapInArrow):  repartition(group_cols), then one streaming task
+                           per shuffle partition folds each Arrow batch into
+                           one merged sketch per key and finalizes every key
+                           at partition end (``merge_by_key``)
 
-The shuffle therefore moves #partitions x #groups sketch rows, never data
-rows — this is what makes the pipeline scan-bound and embarrassingly parallel
-at 100 TB (the reference's designed-in distribution hook is the register-max
-monoid, /root/reference/HyperLogLog/HyperLogLog.cs:733-781; we exploit the
-same property for every sketch kind).
+Both phases group each batch with ``group_codes``, so a group costs one
+n-ary merge call, not one pandas round trip. The shuffle moves #partitions
+x #groups sketch rows, never data rows — what makes the pipeline
+scan-bound at 100 TB (the reference's distribution hook is the same
+register-max monoid, HyperLogLog.cs:733-781; we use it for every kind).
 
 Hashing runs JVM-side by default (``F.xxhash64``, whole-stage codegen; only
 8-byte hashes cross the Arrow boundary, not strings). ``hashing="parity"``
@@ -28,12 +30,15 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SKETCH_COL = "sketch"
-_GLOBAL_KEY = "__all__"
+# the one NaN key object: dict lookups compare keys by identity first, so
+# tuples holding it find the NaN group again in every later batch
+_NAN = float("nan")
 
 
 class SketchAggregator:
@@ -64,20 +69,84 @@ class SketchAggregator:
     finalize_fields: list[T.StructField] = []
 
 
-def _isna(v) -> bool:
-    import pandas as pd
-
-    try:
-        return v is None or bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
-
-
 def _group_field(df: DataFrame, name: str) -> T.StructField:
     for f in df.schema.fields:
         if f.name == name:
             return f
     raise ValueError(f"group column {name!r} not in schema {df.schema.simpleString()}")
+
+
+def _key_columns(df: DataFrame, cols: list[str]) -> list[Column]:
+    """Group columns for a projection, with float ``-0.0`` keys folded into
+    ``0.0`` as Spark's groupBy does, so the per-batch grouping and the
+    phase-2 hash partitioning both see one zero."""
+    out = []
+    for c in cols:
+        dt = _group_field(df, c).dataType
+        col = F.col(c)
+        if isinstance(dt, (T.FloatType, T.DoubleType)):
+            col = F.when(col == 0, F.lit(0).cast(dt)).otherwise(col)
+        out.append(col.alias(c))
+    return out
+
+
+def group_codes(batch: pa.RecordBatch, n_keys: int) -> tuple[np.ndarray, list[tuple]]:
+    """Vectorized grouping of ``batch`` on its first ``n_keys`` columns.
+
+    Returns ``(codes, keys)``: row i belongs to group ``codes[i]`` (int64),
+    whose key tuple is ``keys[codes[i]]``. Groups follow Spark's groupBy:
+    NULL is a group of its own, apart from NaN, and every NaN key is the
+    one ``_NAN`` object so a dict keyed by these tuples merges NaN across
+    batches. ``-0.0`` stays apart from ``0.0`` here; project float keys
+    through ``_key_columns`` first."""
+    if n_keys == 0:
+        return np.zeros(batch.num_rows, dtype=np.int64), [()]
+    codes = None
+    for i in range(n_keys):
+        enc = pc.dictionary_encode(batch.column(i), null_encoding="encode")
+        c = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        if codes is not None:
+            # radix-combine with the codes so far, then re-encode: codes
+            # stay below num_rows, so the product never overflows
+            c = pc.dictionary_encode(
+                pa.array(codes * len(enc.dictionary) + c)
+            ).indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        codes = c
+    # dictionary codes count up in order of first appearance
+    _, first = np.unique(codes, return_index=True)
+    cols = []
+    for i in range(n_keys):
+        vals = batch.column(i).take(first).to_pylist()
+        if pa.types.is_floating(batch.schema.field(i).type):
+            vals = [_NAN if v != v else v for v in vals]
+        cols.append(vals)
+    return codes, list(zip(*cols))
+
+
+def _arrow_schema(fields: list[T.StructField]) -> pa.Schema:
+    return pa.schema([pa.field(f.name, _to_arrow(f.dataType)) for f in fields])
+
+
+_EMIT_BYTES = 64 << 20  # sketch bytes per output batch
+
+
+def _emit(acc: dict[tuple, bytes], schema: pa.Schema, n_keys: int,
+          tail: Callable[[list, list], list[pa.Array]]) -> Iterator[pa.RecordBatch]:
+    """Drain ``acc`` (key tuple -> sketch) into batches of key columns +
+    ``tail(keys, sketches)`` of about _EMIT_BYTES sketch bytes each, so a
+    task never holds a second full copy of its sketches."""
+    keys, sks, size = [], [], 0
+    while acc:
+        key, sk = acc.popitem()
+        keys.append(key)
+        sks.append(sk)
+        size += len(sk)
+        if size >= _EMIT_BYTES or not acc:
+            arrays = [pa.array([k[i] for k in keys], type=schema.field(i).type)
+                      for i in range(n_keys)]
+            yield pa.RecordBatch.from_arrays(arrays + tail(keys, sks),
+                                             schema=schema)
+            keys, sks, size = [], [], 0
 
 
 def sketch_partials(
@@ -95,21 +164,18 @@ def sketch_partials(
     prepared = agg.prepare_columns(df, value_cols)
     value_names = [f"__v{i}" for i in range(len(prepared))]
     proj = df.select(
-        *[F.col(c) for c in group_cols],
+        *_key_columns(df, group_cols),
         *[c.alias(n) for c, n in zip(prepared, value_names)],
     )
 
-    out_fields = [_group_field(df, c) for c in group_cols] + [
-        T.StructField(SKETCH_COL, T.BinaryType(), False)
-    ]
+    out_fields = [_group_field(df, c) for c in group_cols]
+    out_fields.append(T.StructField(SKETCH_COL, T.BinaryType(), False))
     if with_rows:
         out_fields.append(T.StructField("rows", T.LongType(), False))
     out_schema = T.StructType(out_fields)
-    out_arrow = pa.schema(
-        [pa.field(f.name, _to_arrow(f.dataType)) for f in out_fields]
-    )
+    out_arrow = _arrow_schema(out_fields)
 
-    n_groups_cols = len(group_cols)
+    n_keys = len(group_cols)
     build_grouped = agg.build_grouped
     merge_many = agg.merge_many
 
@@ -119,65 +185,74 @@ def sketch_partials(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            values = {
-                n: batch.column(n_groups_cols + i)
-                for i, n in enumerate(value_names)
-            }
-            if n_groups_cols == 0:
-                codes = np.zeros(batch.num_rows, dtype=np.int64)
-                uniques: list[tuple] = [(_GLOBAL_KEY,)]
-            else:
-                import pandas as pd
-
-                key_cols = [
-                    batch.column(i).to_pandas() for i in range(n_groups_cols)
-                ]
-                if n_groups_cols == 1:
-                    codes_arr, uniq = pd.factorize(key_cols[0], use_na_sentinel=False)
-                    uniques = [(u,) for u in uniq]
-                else:
-                    # radix-combine per-column codes, then factorize the
-                    # int64 keys — O(n) hash path; MultiIndex.factorize
-                    # materializes python tuples and is ~10x slower
-                    col_codes, col_uniqs = [], []
-                    for kc in key_cols:
-                        c, u = pd.factorize(kc, use_na_sentinel=False)
-                        col_codes.append(c.astype(np.int64))
-                        col_uniqs.append(u)
-                    combined = col_codes[0]
-                    for c, u in zip(col_codes[1:], col_uniqs[1:]):
-                        combined = combined * np.int64(len(u)) + c
-                    codes_arr, _ = pd.factorize(combined)
-                    first_pos = (
-                        pd.Series(codes_arr).drop_duplicates().index.values
-                    )
-                    uniques = [
-                        tuple(col_uniqs[j][col_codes[j][fp]]
-                              for j in range(n_groups_cols))
-                        for fp in first_pos
-                    ]
-                codes = codes_arr.astype(np.int64)
-            sketches = build_grouped(codes, values, len(uniques))
-            counts = np.bincount(codes, minlength=len(uniques))
-            for gi, (key, sk) in enumerate(zip(uniques, sketches)):
+            values = {n: batch.column(n_keys + i) for i, n in enumerate(value_names)}
+            codes, keys = group_codes(batch, n_keys)
+            sketches = build_grouped(codes, values, len(keys))
+            counts = np.bincount(codes, minlength=len(keys))
+            for key, sk, cnt in zip(keys, sketches, counts):
                 prev = acc.get(key)
                 acc[key] = sk if prev is None else merge_many([prev, sk])
-                nrows[key] = nrows.get(key, 0) + int(counts[gi])
-        if not acc:
-            return
-        keys = list(acc.keys())
-        arrays = []
-        for i in range(n_groups_cols):
-            col_vals = [None if _isna(k[i]) else k[i] for k in keys]
-            arrays.append(pa.array(col_vals, type=out_arrow.field(i).type))
-        arrays.append(
-            pa.array([acc[k] for k in keys], type=pa.binary())
-        )
-        if with_rows:
-            arrays.append(pa.array([nrows[k] for k in keys], type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_arrow)
+                nrows[key] = nrows.get(key, 0) + int(cnt)
+
+        def tail(keys, sks):
+            arrays = [pa.array(sks, type=pa.binary())]
+            if with_rows:
+                arrays.append(pa.array([nrows[k] for k in keys], pa.int64()))
+            return arrays
+
+        yield from _emit(acc, out_arrow, n_keys, tail)
 
     return proj.mapInArrow(build_partition, out_schema)
+
+
+def merge_by_key(
+    df: DataFrame,
+    key_cols: list[str],
+    merge_many: Callable[[list[bytes]], bytes],
+    finalize: Callable[[bytes], dict[str, Any]] | None = None,
+    finalize_fields: list[T.StructField] | None = None,
+) -> DataFrame:
+    """Merge the SKETCH_COL cells of ``df`` (key_cols + SKETCH_COL) per key
+    within each partition: one mapInArrow streams the Arrow batches, groups
+    each with ``group_codes`` and keeps one merged sketch per key,
+    ``acc[key] = merge_many(cells_of_key + [acc[key]])``, then emits
+    key_cols + the merged SKETCH_COL (or ``finalize(merged)`` as
+    ``finalize_fields``). Over ``df.repartition(*key_cols)`` this is a
+    complete grouped merge (phase 2); over unshuffled rows, a map-side
+    combine."""
+    n_keys = len(key_cols)
+    tail_fields = (list(finalize_fields) if finalize is not None
+                   else [T.StructField(SKETCH_COL, T.BinaryType(), False)])
+    out_fields = [_group_field(df, c) for c in key_cols] + tail_fields
+    out_arrow = _arrow_schema(out_fields)
+
+    def finalized(keys, sks):
+        if finalize is None:
+            return [pa.array(sks, type=pa.binary())]
+        rows = [finalize(sk) for sk in sks]
+        # from_pandas: a NaN result reads as NULL, as it did via pandas
+        return [pa.array([r[f.name] for r in rows],
+                         type=out_arrow.field(n_keys + i).type, from_pandas=True)
+                for i, f in enumerate(tail_fields)]
+
+    def merge_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict[tuple, bytes] = {}
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            codes, keys = group_codes(batch, n_keys)
+            cells = batch.column(n_keys).to_pylist()
+            order = np.argsort(codes, kind="stable")
+            bounds = np.searchsorted(codes[order], np.arange(len(keys) + 1))
+            for g, key in enumerate(keys):
+                sks = [cells[j] for j in order[bounds[g]:bounds[g + 1]]]
+                prev = acc.get(key)
+                if prev is not None:
+                    sks.append(prev)
+                acc[key] = merge_many(sks)
+        yield from _emit(acc, out_arrow, n_keys, finalized)
+
+    return df.mapInArrow(merge_partition, T.StructType(out_fields))
 
 
 def sketch_agg(
@@ -188,45 +263,22 @@ def sketch_agg(
     finalize: bool = True,
 ) -> DataFrame:
     """Full two-phase aggregation. Returns group_cols + finalized fields
-    (or group_cols + the merged sketch when finalize=False)."""
+    (or group_cols + the merged sketch when finalize=False).
+
+    Phase 1 (``sketch_partials``) builds one partial per (partition,
+    group); phase 2 is ``merge_by_key`` over the partials repartitioned on
+    the group keys: one streaming mapInArrow task per shuffle partition,
+    n-ary merges per key, no Python call per group. The global case groups
+    on a constant ``__g`` key through the same path."""
     group_cols = list(group_cols or [])
+    key_cols = group_cols or ["__g"]
     partials = sketch_partials(df, value_cols, agg, group_cols)
-
-    dummy = not group_cols
-    if dummy:
+    if not group_cols:
         partials = partials.withColumn("__g", F.lit(1))
-        key_cols = ["__g"]
-    else:
-        key_cols = group_cols
-
-    if finalize:
-        tail_fields = list(agg.finalize_fields)
-    else:
-        tail_fields = [T.StructField(SKETCH_COL, T.BinaryType(), False)]
-    out_schema = T.StructType(
-        [_group_field(partials, c) for c in key_cols] + tail_fields
-    )
-    merge_many = agg.merge_many
-    fin = agg.finalize
-    tail_names = [f.name for f in tail_fields]
-
-    def merge_group(pdf):
-        import pandas as pd
-
-        merged = merge_many(list(pdf[SKETCH_COL]))
-        row = {c: [pdf[c].iloc[0]] for c in key_cols}
-        if finalize:
-            vals = fin(merged)
-            for n in tail_names:
-                row[n] = [vals[n]]
-        else:
-            row[SKETCH_COL] = [merged]
-        return pd.DataFrame(row)
-
-    out = partials.groupBy(*key_cols).applyInPandas(merge_group, out_schema)
-    if dummy:
-        out = out.drop("__g")
-    return out
+    partials = partials.select(*key_cols, SKETCH_COL).repartition(*key_cols)
+    out = merge_by_key(partials, key_cols, agg.merge_many,
+                       agg.finalize if finalize else None, agg.finalize_fields)
+    return out if group_cols else out.drop("__g")
 
 
 def _to_arrow(dt: T.DataType) -> pa.DataType:

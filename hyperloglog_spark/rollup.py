@@ -17,24 +17,30 @@ serves all nine sketch kinds; a group whose cells mix kinds (or, for HLL,
 precisions — mirroring the equal-m check at HyperLogLog.cs:740-744)
 raises rather than merging garbage.
 
-Scale shape: phase 1 is a map-side combine (mapInArrow folding each input
-partition's rows per key), so at most (#partitions x #groups) sketch rows
-cross the shuffle — the same two-phase discipline as the build path in
-engine/aggregate.py. Merges are associative and commutative, so the
-rolled-up sketch is byte-identical to one built directly from the raw
-rows (asserted in tests/test_rollup.py).
+Scale shape: both phases are ``engine.aggregate.merge_by_key``, the same
+streaming per-key merge the build path's phase 2 runs. Phase 1 folds each
+input partition's cells per key (a map-side combine), so at most
+(#partitions x #groups) sketch rows cross the shuffle; phase 2 runs it
+again over ``repartition(group_by)``, one mapInArrow task per shuffle
+partition with one n-ary merge per key and batch. Merges are associative
+and commutative, so the rolled-up sketch is byte-identical to one built
+directly from the raw rows (asserted in tests/test_rollup.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .engine.aggregate import SKETCH_COL, _group_field, _isna, _to_arrow
+from .engine.aggregate import (
+    SKETCH_COL,
+    _key_columns,
+    merge_by_key,
+    tree_merge_rows,
+)
 from .sketch import (
     bloom,
     cbf,
@@ -99,82 +105,24 @@ def merge_sketches(
         [group_by] if isinstance(group_by, str) else list(group_by or [])
     )
     proj = df.select(
-        *[F.col(c) for c in group_cols],
+        *_key_columns(df, group_cols),
         F.col(sketch_col).alias(SKETCH_COL),
     ).filter(F.col(SKETCH_COL).isNotNull())
-
-    out_fields = [_group_field(df, c) for c in group_cols] + [
-        T.StructField(alias, T.BinaryType(), False)
-    ]
-    out_schema = T.StructType(out_fields)
-    partial_schema = T.StructType(
-        [_group_field(df, c) for c in group_cols]
-        + [T.StructField(SKETCH_COL, T.BinaryType(), False)]
-    )
-    partial_arrow = pa.schema(
-        [pa.field(f.name, _to_arrow(f.dataType)) for f in partial_schema.fields]
-    )
-    n_keys = len(group_cols)
-
-    def combine_partition(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple, bytes] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            keys_cols = [batch.column(i).to_pylist() for i in range(n_keys)]
-            cells = batch.column(n_keys).to_pylist()
-            per_key: dict[tuple, list[bytes]] = {}
-            for row_i, cell in enumerate(cells):
-                key = tuple(kc[row_i] for kc in keys_cols)
-                per_key.setdefault(key, []).append(cell)
-            for key, sks in per_key.items():
-                prev = acc.get(key)
-                if prev is not None:
-                    sks.append(prev)
-                acc[key] = _merge_cells(sks, fold_to)
-        if not acc:
-            return
-        keys = list(acc.keys())
-        arrays = [
-            pa.array(
-                [None if _isna(k[i]) else k[i] for k in keys],
-                type=partial_arrow.field(i).type,
-            )
-            for i in range(n_keys)
-        ]
-        arrays.append(pa.array([acc[k] for k in keys], type=pa.binary()))
-        yield pa.RecordBatch.from_arrays(arrays, schema=partial_arrow)
-
-    partials = proj.mapInArrow(combine_partition, partial_schema)
-
-    dummy = not group_cols
-    if dummy:
+    merge = partial(_merge_cells, fold_to=fold_to)
+    # phase 1: map-side combine of each input partition's cells per key
+    partials = merge_by_key(proj, group_cols, merge)
+    if not group_cols:
         # global rollup: tree-reduce the per-partition partials on the
         # cluster (same shape as the build path's collect_merged fix) —
         # a single-group merge would funnel one partial per input
         # partition into ONE task, a cliff for byte-heavy stored cells
         # (Bloom/CBF) at 10^5+ partitions
-        from .engine.aggregate import tree_merge_rows
-
-        merged = tree_merge_rows(
-            partials,
-            lambda sks: _merge_cells([bytes(s) for s in sks], fold_to),
-        )
+        merged = tree_merge_rows(partials,
+                                 lambda sks: merge([bytes(s) for s in sks]))
         return merged.select(F.col(SKETCH_COL).alias(alias))
-    key_cols = group_cols
-
-    def merge_group(pdf):
-        import pandas as pd
-
-        merged = _merge_cells([bytes(s) for s in pdf[SKETCH_COL]], fold_to)
-        row = {c: [pdf[c].iloc[0]] for c in key_cols}
-        row[alias] = [merged]
-        return pd.DataFrame(row)
-
-    out = partials.groupBy(*key_cols).applyInPandas(merge_group, out_schema)
-    return out
+    # phase 2: the same streaming merge over the hash-partitioned partials
+    out = merge_by_key(partials.repartition(*group_cols), group_cols, merge)
+    return out.withColumnRenamed(SKETCH_COL, alias)
 
 
 def hll_rollup(

@@ -380,7 +380,7 @@ def test_session_window_aqe_upstream_repro(spark):
 
     from hyperloglog_spark.streaming.sessions import _needs_aqe_session_pin
 
-    assert _needs_aqe_session_pin(spark)           # AQE on, Spark <= 4.1.x
+    assert _needs_aqe_session_pin(spark)           # AQE on
     base = dt.datetime(2024, 1, 1)
     df = spark.createDataFrame(
         [(1, base), (1, base + dt.timedelta(seconds=10)),
@@ -415,6 +415,25 @@ def test_session_window_pin_skipped_when_aqe_off(spark):
                                    watermark_delay=None)
         assert got.count() == 2
         assert "Repartition" not in got._jdf.queryExecution().logical().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+@pytest.mark.parametrize("version", ["4.2.0", "5.0.0"])
+def test_session_window_pin_kept_on_newer_spark(spark, monkeypatch, version):
+    """No upstream fix for the AQE session loss is known, so a newer Spark
+    keeps the pin while AQE is on; only AQE off drops it."""
+    from pyspark.sql import SparkSession
+
+    from hyperloglog_spark.streaming.sessions import _needs_aqe_session_pin
+
+    monkeypatch.setattr(SparkSession, "version",
+                        property(lambda self: version))
+    assert spark.version == version
+    assert _needs_aqe_session_pin(spark)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert not _needs_aqe_session_pin(spark)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 

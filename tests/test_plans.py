@@ -13,6 +13,7 @@ from hyperloglog_spark.engine.plans import (
     assert_max_exchanges,
     assert_pruned_scan,
     n_exchanges,
+    plan_string,
     pushed_filters,
     scan_columns,
 )
@@ -43,6 +44,32 @@ def test_hll_grouped_single_shuffle(events):
     assert_pruned_scan(q, {"user_id", "event_type"})
     # one Exchange: partials -> grouped merge. Raw rows shuffle zero times.
     assert_max_exchanges(q, 1)
+
+
+def _phase2_plans(spark, tmp_path_factory, events):
+    from hyperloglog_spark import hll_sketch_agg, merge_sketches
+
+    path = str(tmp_path_factory.mktemp("phase2") / "cells")
+    hll_sketch_agg(events.withColumn("day", F.to_date("ts")), "user_id",
+                   group_by=["event_type", "day"]).write.parquet(path)
+    return {
+        "grouped": approx_distinct(events, "user_id", group_by="event_type",
+                                   engine="arrow"),
+        "global": approx_distinct(events, "user_id", engine="arrow"),
+        "merge_sketches": merge_sketches(spark.read.parquet(path),
+                                         group_by="event_type"),
+    }
+
+
+def test_phase2_is_one_exchange_and_no_pandas_group_merge(
+        spark, tmp_path_factory, events):
+    # phase 2 is repartition(keys) + one streaming mapInArrow per shuffle
+    # partition: exactly one Exchange, no per-group pandas call
+    for name, q in _phase2_plans(spark, tmp_path_factory, events).items():
+        plan = plan_string(q, "simple")
+        assert n_exchanges(q) == 1, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        assert "MapInArrow" in plan, (name, plan)
 
 
 def test_hll_filter_pushdown_reaches_scan(events):
